@@ -328,7 +328,12 @@ def _jvm_spread(spark, df):
     codegen stages use the executor cores (measured on sf0.1: simhash_md5
     10.0 s -> 1.6 s at 16 parts; 32/64 parts were no better/worse).
     Values are unchanged — the driver hash is order-insensitive."""
-    return df.repartition(min(16, spark.sparkContext.defaultParallelism))
+    # never shrink: an input already split at least that many ways is
+    # returned as is (a shrinking repartition would serialize a large input)
+    target = min(16, spark.sparkContext.defaultParallelism)
+    if df.rdd.getNumPartitions() >= target:
+        return df
+    return df.repartition(target)
 
 
 def _q_minhash_md5(spark, sf_dir):

@@ -34,6 +34,16 @@ def test_exactly_fifty_fully_oracled_queries():
     )
 
 
+def test_jvm_spread_never_shrinks_partitions(spark):
+    target = min(16, spark.sparkContext.defaultParallelism)
+    wide = spark.range(0, 320, numPartitions=32)
+    assert entry._jvm_spread(spark, wide).rdd.getNumPartitions() == 32
+    narrow = spark.range(0, 320, numPartitions=1)
+    spread = entry._jvm_spread(spark, narrow)
+    assert spread.rdd.getNumPartitions() == target
+    assert sorted(r.id for r in spread.collect()) == list(range(320))
+
+
 def test_entry_runs(spark):
     df = entry.entry(spark)
     assert df.count() > 0

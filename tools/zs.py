@@ -585,7 +585,7 @@ def main(argv=None):
         default=None,
         help="codec policy for encodes (default: ZS_CODEC_POLICY env or "
         "balanced; `size` = cold-archive max compression, `speed` = "
-        "decode-fastest, no probe-gated codecs)",
+        "decode-fastest, no zstd/FSST strings or ZSTD_BT ints)",
     )
     sub = ap.add_subparsers(dest="cmd", required=True)
 

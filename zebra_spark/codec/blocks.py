@@ -231,11 +231,8 @@ class _Sizes:
         self.zebra += meta["zebra_bytes"] + extra_zebra
 
 
-def _encode_column(
-    arr: pa.Array, path: str, out: list, sizes: _Sizes, use_hints: bool = True
-):
+def _encode_column(arr: pa.Array, path: str, out: list, sizes: _Sizes):
     arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-    key = path if use_hints else None
     t = arr.type
     flags = 0
     has_nulls = arr.null_count > 0
@@ -246,7 +243,7 @@ def _encode_column(
         # bool -> int8 is a zero-copy reinterpretation; the codec plans
         # narrow dtypes natively (values 0/1, wire unchanged)
         valid = _validity_np(arr).view(np.int8)
-        c, p, m = encode_ints(valid, probe_key=key and key + "#valid")
+        c, p, m = encode_ints(valid)
         out.append(bytes([c]))
         out.append(p)
         sizes.leaf(path + "#valid", m)
@@ -259,7 +256,6 @@ def _encode_column(
             vals,
             float_view=pa.types.is_float64(t),
             float32_view=pa.types.is_float32(t),
-            probe_key=key,
         )
         out.append(bytes([c]))
         out.append(p)
@@ -270,7 +266,7 @@ def _encode_column(
     ) or pa.types.is_large_binary(t):
         lengths, concat = _binary_parts(arr)
         null_free = pc.fill_null(arr, b"" if not pa.types.is_string(t) else "") if arr.null_count else arr
-        c, p, m = encode_strings(lengths, concat, arrow_array=null_free, probe_key=key)
+        c, p, m = encode_strings(lengths, concat, arrow_array=null_free)
         out.append(bytes([c]))
         out.append(p)
         sizes.leaf(path, m)
@@ -282,16 +278,16 @@ def _encode_column(
         # int32 for list / int64 for large_list — the codec takes either
         lengths = lengths_arr.to_numpy(zero_copy_only=False)
         child = arr.flatten()  # concatenated values of valid rows only
-        c, p, m = encode_ints(lengths, probe_key=key and key + "#len")
+        c, p, m = encode_ints(lengths)
         out.append(bytes([c]))
         out.append(p)
         sizes.leaf(path + "#len", m)
         out.append(np.uint64(len(child)).astype("<u8").tobytes())
-        _encode_column(child, path + ".item", out, sizes, use_hints=use_hints)
+        _encode_column(child, path + ".item", out, sizes)
         return
     if pa.types.is_struct(t):
         for i, field in enumerate(t):
-            _encode_column(arr.field(i), path + "." + field.name, out, sizes, use_hints=use_hints)
+            _encode_column(arr.field(i), path + "." + field.name, out, sizes)
         return
     if pa.types.is_map(t):
         # map<k,v> ~ zebra's Map table nested per row (Schema.hs:83): a
@@ -304,12 +300,12 @@ def _encode_column(
             lengths_arr = pc.fill_null(lengths_arr, 0)
         lengths = lengths_arr.to_numpy(zero_copy_only=False)
         child = as_list.flatten()
-        c, p, m = encode_ints(lengths, probe_key=key and key + "#len")
+        c, p, m = encode_ints(lengths)
         out.append(bytes([c]))
         out.append(p)
         sizes.leaf(path + "#len", m)
         out.append(np.uint64(len(child)).astype("<u8").tobytes())
-        _encode_column(child, path + ".entries", out, sizes, use_hints=use_hints)
+        _encode_column(child, path + ".entries", out, sizes)
         return
     raise NotImplementedError(f"unsupported arrow type for block encode: {t}")
 
@@ -329,13 +325,11 @@ def _map_as_list_type(t: pa.DataType) -> pa.DataType:
     )
 
 
-def encode_batch(batch: pa.RecordBatch, use_hints: bool = True):
+def encode_batch(batch: pa.RecordBatch):
     """Encode a RecordBatch into one striped block. Returns (payload, meta).
 
-    ``use_hints=False`` disables the per-column probe/hint caches so the
-    encode is a pure function of the batch values (the audit path in
-    operators/verify.py needs a deterministic re-encode; the caches make
-    production selection depend on which blocks preceded this one)."""
+    The payload is a pure function of the batch and the codec policy: the
+    same batch gives the same bytes whatever was encoded before it."""
     out: list[bytes] = [
         BLOCK_MAGIC,
         np.uint32(batch.num_rows).astype("<u4").tobytes(),
@@ -343,7 +337,7 @@ def encode_batch(batch: pa.RecordBatch, use_hints: bool = True):
     ]
     sizes = _Sizes()
     for name, col in zip(batch.schema.names, batch.columns):
-        _encode_column(col, name, out, sizes, use_hints=use_hints)
+        _encode_column(col, name, out, sizes)
     payload = b"".join(out)
     meta = {
         "n_rows": batch.num_rows,

@@ -82,7 +82,7 @@ class StrCodec:
     ZEBRA = 0  # lengths int_array + snappy concat (Array.hs:44-68)
     DICT = 1  # unique strings + index int column
     FSST = 2  # BPE-style symbol-table compression + lengths
-    ZLIB = 3  # DEFLATE concat (stdlib; r5 ext) — probe-gated like FSST
+    ZLIB = 3  # DEFLATE concat (stdlib; r5 ext) — decode-only
     ZSTD = 4  # zstd concat (pyarrow codec; r5 ext) — same wire frame as ZLIB
     FSST_Z = 5  # FSST section wrapped in zstd (symbols, then entropy)
 
@@ -122,7 +122,6 @@ def encode_ints(
     allow: set[int] | None = None,
     float_view: bool = False,
     float32_view: bool = False,
-    probe_key: str | None = None,
 ):
     """Select + encode. Returns ``(codec_id, payload_bytes, meta_dict)``.
 
@@ -135,22 +134,18 @@ def encode_ints(
     float32 bit patterns — ALP decimal can't apply (the container is not
     an f64 image) but ALP-RD can (it is a pure bit transform).
 
-    ``probe_key``: stable column identity enabling the selector HINT cache
-    (r5): the first block of a column runs the full candidate menu and
-    remembers the winner (plus its tuning — PFoR cut, ALP-RD cut); the
-    next ``_INT_HINT_USES`` blocks of the same column plan only zebra +
-    that winner, skipping the losing candidates' full-array passes
-    (~45% of selector time on token streams).  The <=zebra bound is
-    UNTOUCHED — zebra is always planned exactly and selection among the
-    offered candidates stays exact-size — only which candidates are
-    offered narrows between revalidations.  Drift is bounded two ways:
-    the menu re-runs in full every 64 blocks, and a hinted winner that
-    loses its own block (data shifted under it) invalidates the entry
-    immediately.
+    The selection is a pure function of the arguments and the codec
+    policy: the same values give the same bytes whatever was encoded
+    before them.  Blocks of at most ``_GATE_FULL`` values cost the whole
+    menu exactly.  Larger blocks sample-then-cost (BtrBlocks, Kuschewski
+    et al. 2023): the menu runs on 16 stratified 4k-value slices, the
+    candidates are ranked by sampled size x decode handicap, and only
+    zebra, CONSTANT and the top-ranked candidate are costed exactly on the
+    full block.  Zebra is always costed exactly, so the selected payload
+    is never larger than zebra's.
 
     Costing reuses a single :class:`PackPlan` per candidate (one pass each)
     and the winner's plan assembles the payload without recomputation.
-    Expensive candidates are gated by cheap sampled stats.
     """
     # r7: narrow signed ints stay at their native width through planning
     # (see plan_int_array) — every candidate below either handles the
@@ -162,223 +157,169 @@ def encode_ints(
     ):
         values = values.astype(_I64)
     n = len(values)
+    # decode-cost-aware selection (payload sizes stay actual): see
+    # _DECODE_HANDICAP.  The <=zebra bound is untouched: zebra's handicap
+    # is 1.0, so any winner satisfies size * handicap < zsize => size <
+    # zsize.
+    handicap = _DECODE_HANDICAP if _CODEC_POLICY != "size" else {}
 
-    hint = None
-    if probe_key is not None:
-        h = _INT_HINT_CACHE.get(probe_key)
-        if h is not None and h["uses"] > 0:
-            h["uses"] -= 1
-            hint = h
-    menu = None if hint is None else {hint["winner"], IntCodec.CONSTANT}
+    def best(cands):
+        return min(cands, key=lambda c: (cands[c][0] * handicap.get(c, 1.0), c))
 
-    def allowed(c):
-        if allow is not None and c not in allow:
-            return False
-        return menu is None or c in menu
+    if allow is not None:
+        offer = _INT_MENU & set(allow)
+    elif _CODEC_POLICY == "speed":
+        offer = _INT_MENU - {IntCodec.ZSTD_BT}  # only when explicitly allowed
+    else:
+        offer = _INT_MENU
+    if n > _GATE_FULL:
+        sample = _gate_sample(values)
+        ranked, _ = _int_candidates(
+            sample, plan_int_array(sample), offer, float_view, float32_view,
+            sample=True,
+        )
+        offer = offer & {IntCodec.CONSTANT, best(ranked)}
 
     zplan = plan_int_array(values)
-    zsize = zplan.size
-    # (size, thunk-producing-payload)
-    candidates: dict[int, tuple[int, object]] = {
-        IntCodec.ZEBRA: (zsize, lambda: pack_from_plan(zplan))
-    }
-
-    n_runs = None
-    if n > 0:
-        if (
-            allowed(IntCodec.CONSTANT)
-            and zplan.vmin == zplan.vmax
-        ):
-            candidates[IntCodec.CONSTANT] = (
-                8,
-                lambda: np.int64(values[0]).astype("<i8").tobytes(),
-            )
-
-        if allowed(IntCodec.RLE) and n >= 64:
-            # sampled run-ratio gate before the full O(n) split
-            sample = values[: 4096]
-            samp_runs = int((sample[1:] != sample[:-1]).sum()) + 1
-            if samp_runs <= len(sample) // 2:
-                rv, rl = _rle_split(values)
-                n_runs = len(rv)
-                if n_runs <= n // 2:
-                    pv, pl = plan_int_array(rv), plan_int_array(rl)
-                    candidates[IntCodec.RLE] = (
-                        4 + pv.size + pl.size,
-                        lambda pv=pv, pl=pl, rv=rv: (
-                            np.uint32(len(rv)).astype("<u4").tobytes()
-                            + pack_from_plan(pv)
-                            + pack_from_plan(pl)
-                        ),
-                    )
-
-        # PFoR first: cheap to cost exactly and often the tightest bound,
-        # so the DICT/DELTA sampled skip-gates below compare against the
-        # best candidate so far instead of only zebra — skipping more
-        # full-array planning passes (selector cost, not correctness: the
-        # <=zebra bound is carried by the always-present zebra candidate)
-        pfor_b = None
-        if allowed(IntCodec.PFOR) and n >= 256:
-            pfor = _pfor_build(
-                values, zplan, hint_b=(hint or {}).get("pfor_b")
-            )
-            if pfor is not None:
-                size, thunk, pfor_b = pfor
-                candidates[IntCodec.PFOR] = (size, thunk)
-
-        if allowed(IntCodec.DICT) and n >= 64:
-            dict_pair = _dict_split(values, zplan)
-            if dict_pair is not None:
-                uniq, inverse = dict_pair
-                pu = plan_int_array(uniq)
-                # sampled skip-gate: planning the full inverse costs a full
-                # zigzag+max pass; extrapolate its size from slices first
-                best_so_far = min(sz for sz, _ in candidates.values())
-                if _sampled_plan_bytes(inverse) * n + pu.size + 4 < best_so_far:
-                    pi = plan_int_array(inverse)
-                    candidates[IntCodec.DICT] = (
-                        4 + pu.size + pi.size,
-                        lambda pu=pu, pi=pi, uniq=uniq: (
-                            np.uint32(len(uniq)).astype("<u4").tobytes()
-                            + pack_from_plan(pu)
-                            + pack_from_plan(pi)
-                        ),
-                    )
-
-        if float_view and allowed(IntCodec.ALP) and n >= 64:
-            alp = _alp_build(values)
-            if alp is not None:
-                size, thunk = alp
-                candidates[IntCodec.ALP] = (size, thunk)
-
-        alprd_r = None
-        if (float_view or float32_view) and allowed(IntCodec.ALP_RD) and n >= 64:
-            rd = _alp_rd_build(
-                values,
-                min(s for s, _ in candidates.values()),
-                hint_r=(hint or {}).get("alprd_r"),
-            )
-            if rd is not None:
-                size, thunk, alprd_r = rd
-                candidates[IntCodec.ALP_RD] = (size, thunk)
-
-        if allowed(IntCodec.DELTA) and n >= 2:
-            # first value kept out of the delta frame so a large base does
-            # not widen the frame-of-reference of the (small) diffs
-            with np.errstate(over="ignore"):
-                deltas = np.subtract(values[1:], values[:-1], dtype=_I64)
-            # sampled skip-gate (see DICT): random-ish data has WIDER diffs
-            # than values, so skip the full delta plan unless slices say
-            # it plausibly beats the current best candidate.  Under the
-            # balanced policy DELTA must additionally clear its 5% decode
-            # handicap to be SELECTED, so the gate bar tightens by the
-            # same factor — a borderline candidate inside the handicap
-            # zone would be rejected after full costing anyway, and the
-            # full 10M-value delta plan costs ~20% of encode time on the
-            # hot token column.  (Sampling error can skip a <5%-margin win;
-            # balanced trades that sliver of size for encode speed — the
-            # <=zebra bound never depends on DELTA.)
-            best_now = min(s for s, _ in candidates.values())
-            bar = best_now
-            if _CODEC_POLICY != "size" and IntCodec.DELTA in _DECODE_HANDICAP:
-                bar = best_now / _DECODE_HANDICAP[IntCodec.DELTA]
-            if _sampled_plan_bytes(deltas) * (n - 1) + 9 < bar:
-                dplan = plan_int_array(deltas)
-                # r4: the deltas themselves go through the cheaper of the
-                # zebra int_array or PFoR — PFoR's single-width unpack
-                # decodes ~2x faster than the per-chunk-width zebra walk
-                # AND is usually smaller on outlier-bearing diffs, which
-                # cut DELTA's measured decode cost from 3.2x PFOR to ~1.4x
-                # (wire: i64 first | u8 inner_codec | inner payload)
-                inner = IntCodec.ZEBRA
-                dsize = dplan.size
-                dthunk = lambda dplan=dplan: pack_from_plan(dplan)
-                dp = _pfor_build(deltas, dplan)
-                if dp is not None and dp[0] < dsize:
-                    inner, (dsize, dthunk) = IntCodec.PFOR, dp[:2]
-                candidates[IntCodec.DELTA] = (
-                    9 + dsize,
-                    lambda inner=inner, dthunk=dthunk: (
-                        np.int64(values[0]).astype("<i8").tobytes()
-                        + bytes([inner])
-                        + dthunk()
-                    ),
-                )
-
-        # ZSTD_BT last: the compressed size IS its costing, so its sampled
-        # gate should compare against the tightest best-so-far.  Policy-
-        # gated off under "speed" (keeps the verify_blocks re-encode audit
-        # deterministic and probe-free) unless explicitly allowed.
-        if (
-            allowed(IntCodec.ZSTD_BT)
-            and n >= 1024
-            and (_CODEC_POLICY != "speed" or (allow is not None and IntCodec.ZSTD_BT in allow))
-        ):
-            zb = _zstd_bt_build(
-                values,
-                zplan,
-                min(s for s, _ in candidates.values()),
-                hinted=hint is not None and hint["winner"] == IntCodec.ZSTD_BT,
-            )
-            if zb is not None:
-                candidates[IntCodec.ZSTD_BT] = zb
-
-    # decode-cost-aware SELECTION (payload sizes stay actual): under the
-    # default balanced policy DELTA pays a 5% size handicap — its decode
-    # needs an extra full cumsum pass (measured ~1.4x zebra, ~2x pfor on
-    # token streams), so it must be >5% smaller to win.  The <=zebra bound
-    # is untouched: zebra's handicap is 1.0, so any winner satisfies
-    # size * handicap < zsize => size < zsize.
-    # NOTE: a size win large enough to matter clears the handicap by
-    # arithmetic alone (size <= 0.85*best already satisfies 1.05*size <
-    # best), so there is deliberately NO separate "waiver" branch — r4
-    # shipped one and it was provably dead code (any input it fired on was
-    # already selected through the handicap).  The 1.05 factor IS the
-    # policy: DELTA must be >5% smaller to buy its extra cumsum pass.
-    handicap = _DECODE_HANDICAP if _CODEC_POLICY != "size" else {}
-    codec = min(
-        candidates,
-        key=lambda c: (candidates[c][0] * handicap.get(c, 1.0), c),
+    candidates, n_runs = _int_candidates(
+        values, zplan, offer, float_view, float32_view
     )
-    if probe_key is not None:
-        if hint is None:
-            # full menu ran: remember the winner + its tuning for the next
-            # _INT_HINT_USES blocks of this column
-            entry = {"winner": codec, "uses": _INT_HINT_USES}
-            if codec == IntCodec.PFOR:
-                entry["pfor_b"] = pfor_b
-            elif codec == IntCodec.ALP_RD:
-                entry["alprd_r"] = alprd_r
-            _INT_HINT_CACHE[probe_key] = entry
-        elif codec != hint["winner"]:
-            # the hinted winner lost its own block — data shifted, re-probe
-            # the full menu next time
-            _INT_HINT_CACHE.pop(probe_key, None)
+    codec = best(candidates)
     size, thunk = candidates[codec]
     meta = {
         "codec": IntCodec.NAMES[codec],
         "n": n,
         "bytes": size,
-        "zebra_bytes": zsize,
+        "zebra_bytes": zplan.size,
         "n_runs": n_runs,
     }
     meta.update(_column_stats(values, zplan))
     return codec, thunk(), meta
 
 
-# selector HINT cache per column path (r5): {key: {"winner": codec,
-# "uses": n, "pfor_b"/"alprd_r": tuning}}.  Same staleness argument as the
-# FSST probe cache below: python workers are reused across jobs, so a key
-# can outlive one dataset; the 64-block full-menu revalidation bounds any
-# staleness, the zebra bound never depends on it (zebra is always planned),
-# and a hinted winner that loses its own block invalidates immediately.
-_INT_HINT_CACHE: dict[str, dict] = {}
+def _int_candidates(
+    values, zplan, offer, float_view, float32_view, sample=False
+):
+    """``({codec: (exact_size, payload_thunk)}, n_runs)`` for zebra plus
+    every codec in ``offer`` that applies to ``values``.  ``n_runs`` is the
+    RLE run count, or None when the run split did not happen.
+    ``sample=True`` marks ``values`` as the gate sample of a larger block
+    (see :func:`_pfor_build`)."""
+    n = len(values)
+    candidates: dict[int, tuple[int, object]] = {
+        IntCodec.ZEBRA: (zplan.size, lambda: pack_from_plan(zplan))
+    }
+    n_runs = None
+    if n == 0:
+        return candidates, n_runs
 
-# ZSTD_BT decode costs ~1.5x the PFoR path (zstd frame inflate ~280 M
-# tok/s + plane recombination), so under balanced it must be >15% smaller
-# to be selected; zipfian token streams clear it by 40%+
-_ZSTD_BT_HANDICAP = 1.15
-_ZSTD_BT_SAMPLE = 1 << 16  # values per sampled-gate probe
+    def best_so_far():
+        return min(s for s, _ in candidates.values())
+
+    if IntCodec.CONSTANT in offer and zplan.vmin == zplan.vmax:
+        candidates[IntCodec.CONSTANT] = (
+            8,
+            lambda: np.int64(values[0]).astype("<i8").tobytes(),
+        )
+
+    if IntCodec.RLE in offer and n >= 64:
+        # sampled run-ratio gate before the full O(n) split
+        head = values[:4096]
+        head_runs = int((head[1:] != head[:-1]).sum()) + 1
+        if head_runs <= len(head) // 2:
+            rv, rl = _rle_split(values)
+            n_runs = len(rv)
+            if n_runs <= n // 2:
+                pv, pl = plan_int_array(rv), plan_int_array(rl)
+                candidates[IntCodec.RLE] = (
+                    4 + pv.size + pl.size,
+                    lambda pv=pv, pl=pl, rv=rv: (
+                        np.uint32(len(rv)).astype("<u4").tobytes()
+                        + pack_from_plan(pv)
+                        + pack_from_plan(pl)
+                    ),
+                )
+
+    if IntCodec.PFOR in offer and n >= 256:
+        pfor = _pfor_build(values, zplan, sample)
+        if pfor is not None:
+            candidates[IntCodec.PFOR] = pfor
+
+    if IntCodec.DICT in offer and n >= 64:
+        dict_pair = _dict_split(values, zplan)
+        if dict_pair is not None:
+            uniq, inverse = dict_pair
+            pu, pi = plan_int_array(uniq), plan_int_array(inverse)
+            candidates[IntCodec.DICT] = (
+                4 + pu.size + pi.size,
+                lambda pu=pu, pi=pi, uniq=uniq: (
+                    np.uint32(len(uniq)).astype("<u4").tobytes()
+                    + pack_from_plan(pu)
+                    + pack_from_plan(pi)
+                ),
+            )
+
+    if float_view and IntCodec.ALP in offer and n >= 64:
+        alp = _alp_build(values)
+        if alp is not None:
+            candidates[IntCodec.ALP] = alp
+
+    if (float_view or float32_view) and IntCodec.ALP_RD in offer and n >= 64:
+        rd = _alp_rd_build(values, best_so_far())
+        if rd is not None:
+            candidates[IntCodec.ALP_RD] = rd
+
+    if IntCodec.DELTA in offer and n >= 2:
+        # first value kept out of the delta frame so a large base does
+        # not widen the frame-of-reference of the (small) diffs
+        with np.errstate(over="ignore"):
+            deltas = np.subtract(values[1:], values[:-1], dtype=_I64)
+        dplan = plan_int_array(deltas)
+        # r4: the deltas themselves go through the cheaper of the zebra
+        # int_array or PFoR — PFoR's single-width unpack decodes ~2x
+        # faster than the per-chunk-width zebra walk AND is usually
+        # smaller on outlier-bearing diffs, which cut DELTA's measured
+        # decode cost from 3.2x PFOR to ~1.4x
+        # (wire: i64 first | u8 inner_codec | inner payload)
+        inner = IntCodec.ZEBRA
+        dsize = dplan.size
+        dthunk = lambda dplan=dplan: pack_from_plan(dplan)
+        dp = _pfor_build(deltas, dplan, sample)
+        if dp is not None and dp[0] < dsize:
+            inner, (dsize, dthunk) = IntCodec.PFOR, dp
+        candidates[IntCodec.DELTA] = (
+            9 + dsize,
+            lambda inner=inner, dthunk=dthunk: (
+                np.int64(values[0]).astype("<i8").tobytes()
+                + bytes([inner])
+                + dthunk()
+            ),
+        )
+
+    # ZSTD_BT last: it drops out unless it clears the tightest best-so-far
+    if IntCodec.ZSTD_BT in offer and n >= 1024:
+        zb = _zstd_bt_build(values, zplan, best_so_far())
+        if zb is not None:
+            candidates[IntCodec.ZSTD_BT] = zb
+    return candidates, n_runs
+
+
+# every codec the encoder may emit (DELTA_V0 is decode-only)
+_INT_MENU = frozenset(IntCodec.NAMES) - {IntCodec.DELTA_V0}
+
+_GATE_SLICES = 16
+_GATE_SLICE = 1 << 12  # 4k values per slice, 64-aligned
+_GATE_FULL = _GATE_SLICES * _GATE_SLICE * 2  # up to this, cost exactly
+
+
+def _gate_sample(values: np.ndarray) -> np.ndarray:
+    """16 evenly-spaced 64-aligned 4k-value slices, concatenated.
+    Stratified across the column because mixed-source columns have long
+    cheap stretches that a prefix sample misjudges (measured: head/mid/tail
+    slices over-estimated a sorted-heavy token column by 7%)."""
+    step = (len(values) - _GATE_SLICE) // (_GATE_SLICES - 1)
+    starts = (np.arange(_GATE_SLICES) * step) & ~63
+    return np.concatenate([values[s : s + _GATE_SLICE] for s in starts])
 
 
 def _zstd_bt_narrow(values: np.ndarray, vmin: int, vmax: int):
@@ -427,9 +368,7 @@ def _zstd_bt_planes(narrow: np.ndarray, width: int) -> np.ndarray:
     return le.view(np.uint8).reshape(-1, width).T.copy().reshape(-1)
 
 
-def _zstd_bt_build(
-    values: np.ndarray, zplan, best_so_far: int, hinted: bool = False
-):
+def _zstd_bt_build(values: np.ndarray, zplan, best_so_far: int):
     """FoR + byte-transpose + zstd level-1 candidate (wire id 9).
 
     The win comes from zstd's FSE entropy stage: zipf-distributed token
@@ -438,35 +377,18 @@ def _zstd_bt_build(
     127 M tok/s, inflate 283 M tok/s).  Level 1 is both the fastest AND
     the smallest here — higher levels spend time finding matches that the
     transposed planes don't have.  Byte-aligned transforms only; the
-    compressed size IS the costing, so a sampled probe skips the full
-    compress when the projection can't clear the selection bar."""
-    if not _zstd_available():
-        return None
+    compressed size IS the costing.  None when it cannot clear
+    ``best_so_far`` after its decode handicap."""
     import pyarrow as pa
 
-    n = len(values)
     width, narrow = _zstd_bt_narrow(values, int(zplan.vmin), int(zplan.vmax))
     codec = pa.Codec("zstd", compression_level=1)
     bar = best_so_far
     if _CODEC_POLICY != "size":
-        bar = best_so_far / _ZSTD_BT_HANDICAP
-    if not hinted and n > 2 * _ZSTD_BT_SAMPLE:
-        # STRATIFIED sample (r6, ADVICE): the old prefix sample misjudged
-        # sorted/clustered columns whose head is unrepresentative — take
-        # 16 evenly-spaced 4k slices across the column instead, the same
-        # shape _sampled_plan_bytes uses.  Selector efficiency only; the
-        # <=zebra bound is unaffected (zebra is always planned exactly).
-        step = max(1, (n - _GATE_SLICE) // (_GATE_SLICES - 1))
-        starts = (np.arange(_GATE_SLICES) * step) & ~63
-        sub = np.concatenate([narrow[s : s + _GATE_SLICE] for s in starts])
-        m = len(sub)
-        sample = _zstd_bt_planes(sub, width)
-        projected = len(codec.compress(sample, asbytes=True)) / (m * width)
-        if projected * n * width + 13 >= bar:
-            return None
+        bar = best_so_far / _DECODE_HANDICAP[IntCodec.ZSTD_BT]
     comp = codec.compress(_zstd_bt_planes(narrow, width), asbytes=True)
     size = 13 + len(comp)
-    if size >= bar and not hinted:
+    if size >= bar:
         return None
 
     vmin = int(zplan.vmin)
@@ -480,31 +402,6 @@ def _zstd_bt_build(
         )
 
     return size, thunk
-_INT_HINT_USES = 64
-
-
-_GATE_SLICES = 16
-_GATE_SLICE = 1 << 12  # 4k values per slice, 64-aligned
-_GATE_FULL = _GATE_SLICES * _GATE_SLICE * 2  # below this, just plan exactly
-
-
-def _sampled_plan_bytes(values: np.ndarray) -> float:
-    """Estimated packed bytes/value from 16 evenly-spaced 64-aligned
-    slices.  Optimistic on purpose (estimates can only SKIP a candidate
-    when clearly unpromising): mixed-source columns have long cheap
-    stretches that few slices would miss (measured: head/mid/tail slices
-    over-estimated a sorted-heavy token column by 7%), so the slices are
-    stratified across the column and a 0.93 slack absorbs the residual
-    sampling error.  Skipping never breaks the <=zebra bound — the zebra
-    candidate is always present.
-    """
-    n = len(values)
-    if n <= _GATE_FULL:
-        return 0.0  # small: always plan exactly
-    step = (n - _GATE_SLICE) // (_GATE_SLICES - 1)
-    starts = (np.arange(_GATE_SLICES) * step) & ~63
-    sl = np.concatenate([values[s : s + _GATE_SLICE] for s in starts])
-    return 0.93 * plan_int_array(sl).size / len(sl)
 
 
 def _alp_build(values_i64: np.ndarray):
@@ -560,9 +457,7 @@ def _alp_build(values_i64: np.ndarray):
     return None
 
 
-def _alp_rd_build(
-    values_i64: np.ndarray, best_so_far: int, hint_r: int | None = None
-):
+def _alp_rd_build(values_i64: np.ndarray, best_so_far: int):
     """ALP-RD candidate for full-mantissa floats — the "real doubles"
     second half of ALP (Afroozeh & Boncz, VLDB 2023): cut each value's
     bits at position ``r`` — the LEFT part (sign + exponent + top mantissa
@@ -607,15 +502,6 @@ def _alp_rd_build(
         pc_ = plan_int_array(inverse.astype(_I64))
         return 6 + n_groups * 8 * r + pd_.size + pc_.size, r, pd_, pc_
 
-    if hint_r is not None and 0 <= hint_r < top:
-        # hinted cut from the per-column cache: one exact costing, no
-        # sample ranking
-        best = cost_exact(int(hint_r))
-        size, r, pd_, pc_ = best
-        if size >= best_so_far:
-            return None
-        return _alp_rd_finish(us, n, n_groups, tz, size, r, pd_, pc_)
-
     sample = np.sort(us[:: max(1, n // 4096)][:4096])
     diff = sample[1:] ^ sample[:-1]
     bl = bit_length64(diff)
@@ -655,7 +541,7 @@ def _alp_rd_build(
 
 
 def _alp_rd_finish(us, n, n_groups, tz, size, r, pd_, pc_):
-    """(size, thunk, r) for a fully-costed ALP-RD cut."""
+    """(size, thunk) for a fully-costed ALP-RD cut."""
 
     def thunk(r=r, pd_=pd_, pc_=pc_):
         if r:
@@ -680,11 +566,11 @@ def _alp_rd_finish(us, n, n_groups, tz, size, r, pd_, pc_):
             ]
         )
 
-    return size, thunk, r
+    return size, thunk
 
 
-def _pfor_build(values: np.ndarray, zplan, hint_b: int | None = None):
-    """Patched frame-of-reference candidate: ``(exact_size, thunk, b)`` or
+def _pfor_build(values: np.ndarray, zplan, sample: bool = False):
+    """Patched frame-of-reference candidate: ``(exact_size, thunk)`` or
     None.
 
     zebra's codec adapts bit width PER 64-VALUE CHUNK, so a zipf-ish token
@@ -699,8 +585,10 @@ def _pfor_build(values: np.ndarray, zplan, hint_b: int | None = None):
     the whole rest of planning), then the best few are costed EXACTLY —
     one comparison pass each for the true exception set — so the reported
     size stays actual and the selector's <=-zebra bound is untouched.
-    ``hint_b`` (from the per-column hint cache) skips the ranking and
-    exact-costs that single cut.
+
+    Exceptions are capped at n/8.  On a gate sample (``sample=True``) the
+    exception count only estimates the block's, so cuts within 3 sigma of
+    the cap stay in (the block's own exact costing applies the hard cap).
     """
     n = len(values)
     with np.errstate(over="ignore"):
@@ -708,6 +596,7 @@ def _pfor_build(values: np.ndarray, zplan, hint_b: int | None = None):
         # subtract must run (and wrap) in int64 exactly as before
         u = np.subtract(values, zplan.vmin, dtype=_I64).view(np.uint64)
     n_groups = -(-n // 64)
+    exc_cap = n // 8 + (3.0 * np.sqrt(n / 8) if sample else 0)
 
     def cost_exact(b: int):
         """(size, b, n_exc, positions, ppos, pval) or None (infeasible)."""
@@ -717,7 +606,7 @@ def _pfor_build(values: np.ndarray, zplan, hint_b: int | None = None):
         else:
             mask = u > np.uint64((1 << b) - 1)
             n_exc = int(np.count_nonzero(mask))
-        if n_exc > n // 8:
+        if n_exc > exc_cap:
             return None
         positions = np.flatnonzero(mask) if n_exc else np.empty(0, _I64)
         exc_vals = values[positions] if n_exc else None
@@ -729,52 +618,49 @@ def _pfor_build(values: np.ndarray, zplan, hint_b: int | None = None):
         return (size, b, n_exc, positions, ppos, pval)
 
     best = None
-    if hint_b is not None:
-        best = cost_exact(int(hint_b))
-    else:
-        step = max(1, n // 8192)
-        su = u[::step][:8192]
-        scale = n / len(su)
-        widths_s = bit_length64(su)
-        hist = np.bincount(widths_s, minlength=65).astype(np.float64) * scale
-        n_exc_at = n - np.cumsum(hist)  # ~count(width > b), estimated
-        bs = np.arange(65, dtype=np.int64)
-        # RANKING estimate: base bits exact; exceptions ~2 B/packed
-        # position + their own total width in bits (suffix sum of
-        # hist[w]*w) — packed values can't beat their own widths
-        t = hist * np.arange(65, dtype=np.float64)
-        incl = np.cumsum(t[::-1])[::-1]  # incl[b] = sum_{w >= b} hist[w]*w
-        exc_bits_at = np.concatenate([incl[1:], [0.0]])  # sum_{w > b}
-        est = n_groups * 8.0 * bs + n_exc_at * 2 + exc_bits_at / 8
-        # sampled feasibility needs slack for binomial noise: with k
-        # exception elements in the sample, std(k) <= sqrt(k), so keep
-        # cuts within 3 sigma of the n/8 bar in the ranking — cost_exact
-        # settles them with the true exception count
-        k = n_exc_at / scale
-        feasible = n_exc_at <= n / 8 + 3.0 * scale * np.sqrt(np.maximum(k, 1.0))
-        if not feasible.any():
-            return None
-        est[~feasible] = np.inf
-        costed = examined = 0
-        for b in (int(x) for x in np.argsort(est, kind="stable")):
-            # each examination pays a full compare pass — cap BOTH the
-            # number of fully-costed cuts and total examinations (a flat
-            # est curve around the optimum otherwise walks many near-tied
-            # cuts)
-            if (
-                costed == 3
-                or examined == 6
-                or est[b] == np.inf
-                or (best and est[b] >= best[0])
-            ):
-                break
-            examined += 1
-            res = cost_exact(b)
-            if res is None:
-                continue  # sample under-counted: truly infeasible cut
-            costed += 1
-            if best is None or res[0] < best[0]:
-                best = res
+    step = max(1, n // 8192)
+    su = u[::step][:8192]
+    scale = n / len(su)
+    widths_s = bit_length64(su)
+    hist = np.bincount(widths_s, minlength=65).astype(np.float64) * scale
+    n_exc_at = n - np.cumsum(hist)  # ~count(width > b), estimated
+    bs = np.arange(65, dtype=np.int64)
+    # RANKING estimate: base bits exact; exceptions ~2 B/packed
+    # position + their own total width in bits (suffix sum of
+    # hist[w]*w) — packed values can't beat their own widths
+    t = hist * np.arange(65, dtype=np.float64)
+    incl = np.cumsum(t[::-1])[::-1]  # incl[b] = sum_{w >= b} hist[w]*w
+    exc_bits_at = np.concatenate([incl[1:], [0.0]])  # sum_{w > b}
+    est = n_groups * 8.0 * bs + n_exc_at * 2 + exc_bits_at / 8
+    # sampled feasibility needs slack for binomial noise: with k
+    # exception elements in the sample, std(k) <= sqrt(k), so keep
+    # cuts within 3 sigma of the n/8 bar in the ranking — cost_exact
+    # settles them with the true exception count
+    k = n_exc_at / scale
+    feasible = n_exc_at <= n / 8 + 3.0 * scale * np.sqrt(np.maximum(k, 1.0))
+    if not feasible.any():
+        return None
+    est[~feasible] = np.inf
+    costed = examined = 0
+    for b in (int(x) for x in np.argsort(est, kind="stable")):
+        # each examination pays a full compare pass — cap BOTH the
+        # number of fully-costed cuts and total examinations (a flat
+        # est curve around the optimum otherwise walks many near-tied
+        # cuts)
+        if (
+            costed == 3
+            or examined == 6
+            or est[b] == np.inf
+            or (best and est[b] >= best[0])
+        ):
+            break
+        examined += 1
+        res = cost_exact(b)
+        if res is None:
+            continue  # sample under-counted: truly infeasible cut
+        costed += 1
+        if best is None or res[0] < best[0]:
+            best = res
     if best is None:
         return None
     size, b, n_exc, positions, ppos, pval = best
@@ -809,7 +695,7 @@ def _pfor_build(values: np.ndarray, zplan, hint_b: int | None = None):
             out.append(pack_from_plan(pval))
         return b"".join(out)
 
-    return size, thunk, b
+    return size, thunk
 
 
 def _column_stats(values: np.ndarray, zplan) -> dict:
@@ -1134,32 +1020,17 @@ def zebra_strings_size(lengths: np.ndarray, concat: bytes) -> int:
     return len(pack_strings(lengths, concat))
 
 
-# speed-vs-size policy for expensive string codecs (FSST auto-probe):
-#   balanced (default) — require both the size win AND a bounded decode cost
-#   size               — size-only gate (r1/r2 behavior)
-#   speed              — never auto-fire FSST (explicit allow= still works)
+# codec policy, read once at import:
+#   balanced (default) — a candidate must win on size AND fit its decode cost
+#   size               — size-only selection (no decode handicaps or budgets)
+#   speed              — no ZSTD_BT and no FSST/zstd string candidates unless
+#                        explicitly allowed
 _CODEC_POLICY = os.environ.get("ZS_CODEC_POLICY", "balanced")
-# FSST-family balanced gate is ABSOLUTE ns/byte (r6): the old snappy-ratio
-# gate measured both sides on this sandbox's throttled clock, so the
-# decision tracked the host's instantaneous grant instead of the codec —
-# on a host where the numpy symbol expansion actually decodes fast, FSST/
-# FSST_Z could never prove it because snappy sped up by the same grant.
-# The budget is the SAME relative bar against a pinned nominal snappy
-# decompress cost (~0.6 ns/byte on an unthrottled core; snappy's own
-# published order of magnitude): 4.0 x 0.6 = 2.4 ns/byte.  Measured on
-# this sandbox: snappy 1.7-2.5 ns/B (throttled), FSST 32-48 ns/B — fails
-# the bar by >13x, so this host's balanced selection is unchanged; a host
-# whose measured FSST decode clears 2.4 ns/B selects it (pinned by
-# tests/test_codecs.py).
-_FSST_NSPB_BUDGET = float(os.environ.get("ZS_FSST_NSPB_BUDGET", "2.4"))
 
 
 @_contextlib.contextmanager
 def codec_policy(policy: str):
-    """Temporarily override the codec policy for the calling thread's
-    encodes.  operators/verify.py re-encodes under ``speed`` so the audit
-    pass is probe-free (no wall-clock-dependent FSST/ZLIB decode probes)
-    and therefore a deterministic function of the block values."""
+    """Temporarily override the codec policy for this process's encodes."""
     global _CODEC_POLICY
     prev = _CODEC_POLICY
     _CODEC_POLICY = policy
@@ -1168,73 +1039,60 @@ def codec_policy(policy: str):
     finally:
         _CODEC_POLICY = prev
 
-# int-codec selection handicaps under the balanced policy: DELTA decode
+
+# Decode costs are fixed per codec, so selection never reads a clock.
+#
+# Int codecs pay a SIZE handicap under the balanced policy: DELTA decode
 # needs an extra full cumsum pass over the output (measured ~1.4x zebra /
 # ~2x pfor on token streams), so it must win by >5% on size to be chosen;
 # ZSTD_BT decode pays the zstd inflate + plane recombination (~1.5x the
-# PFoR path), so it must win by >15%
+# PFoR path), so it must win by >15% (zipfian token streams clear it by
+# 40%+).  A size win large enough to matter clears a handicap by
+# arithmetic alone, so there is deliberately no separate waiver.
 _DECODE_HANDICAP = {
     IntCodec.DELTA: 1.05,
-    IntCodec.ZSTD_BT: _ZSTD_BT_HANDICAP,
+    IntCodec.ZSTD_BT: 1.15,
 }
+# String codecs beyond snappy (zebra's) and DICT: decode cost per output
+# byte as a multiple of snappy's.  The balanced policy offers a codec only
+# within _STR_DECODE_BUDGET (a size-only gate once let FSST fire on
+# document text and the decode leg regressed 3.2x).  Measured on 64 KB
+# samples of F1 doc_id, sf0.1 documents text/source and customer c_name
+# (4-core x86 VM, best of 7): zstd-12 0.7-1.7x snappy; the numpy FSST
+# symbol expansion 12-39x, FSST_Z the same plus one fast inflate.  So
+# balanced offers zstd and never the FSST family.
+_STR_DECODE_COST = {
+    StrCodec.ZSTD: 2.0,
+    StrCodec.FSST: 20.0,
+    StrCodec.FSST_Z: 20.0,
+}
+_STR_DECODE_BUDGET = 4.0
 
-# probe-gate decisions per column path: {key: (fsst_worth, uses_left)}.
-# Spark python workers are REUSED across jobs, so a key can outlive one
-# dataset; the 64-block revalidation bounds any staleness, and the cache
-# only gates the PROBE — per-block size comparison still decides.
-_FSST_PROBE_CACHE: dict[str, tuple[bool, int]] = {}
+
+def _str_offered(codec: int) -> bool:
+    """Whether the policy offers string ``codec`` without an explicit
+    ``allow``."""
+    if _CODEC_POLICY == "size":
+        return True
+    return (
+        _CODEC_POLICY != "speed"
+        and _STR_DECODE_COST[codec] <= _STR_DECODE_BUDGET
+    )
 
 
-# general-purpose-compressor auto-probe: same machinery as FSST — entropy
-# coding typically beats snappy 2-3x on text at a decode cost between
-# snappy's and FSST's, so it fills the gap the balanced policy leaves when
-# FSST fails its decode budget.  The candidate is zstd via the pyarrow
-# codec when available (measured on document text vs DEFLATE-6: level 12
-# is 3% smaller, 1.4x faster compress AND 4.4x faster decompress — a
-# strict dominance), falling back to stdlib DEFLATE otherwise.  Both wire
-# ids stay decodable forever; only the CANDIDATE choice depends on the
-# environment.
-_GP_DECODE_BUDGET = 4.0
-_ZLIB_LEVEL = 6
-_ZSTD_LEVEL = 12  # balanced: beats DEFLATE-6 on size, compress and decode
+# zstd measured on document text vs DEFLATE-6: level 12 is 3% smaller,
+# 1.4x faster compress AND 4.4x faster decompress
+_ZSTD_LEVEL = 12
 _ZSTD_LEVEL_SIZE = 19  # size policy: ~19% smaller than DEFLATE-6 on text
-_GP_MAX_FULL = 32 << 20  # bound the per-block full-compress latency
-_GP_PROBE_CACHE: dict[str, tuple[bool, int]] = {}
-
-# cached-positive probes attempt the expensive candidate on EVERY block of
-# the column; if it keeps losing the per-block size selection anyway, flip
-# the cache negative (the 64-block revalidation will re-probe) instead of
-# paying full FSST/zstd for a candidate that is then discarded
-_PROBE_LOSS_LIMIT = 4
-_FSST_LOSS_STREAK: dict[str, int] = {}
-_GP_LOSS_STREAK: dict[str, int] = {}
-
-_HAVE_ZSTD: bool | None = None
+_ZSTD_MAX_FULL = 32 << 20  # bound the per-block full-compress latency
 
 
-def _zstd_available() -> bool:
-    global _HAVE_ZSTD
-    if _HAVE_ZSTD is None:
-        try:
-            import pyarrow as pa
+def _zstd_compress(data, level: int) -> bytes:
+    import pyarrow as pa
 
-            pa.Codec("zstd", compression_level=_ZSTD_LEVEL)
-            _HAVE_ZSTD = True
-        except Exception:
-            _HAVE_ZSTD = False
-    return _HAVE_ZSTD
-
-
-def _gp_compress(data, gp_id: int, level: int) -> bytes:
-    if gp_id == StrCodec.ZSTD:
-        import pyarrow as pa
-
-        return pa.Codec("zstd", compression_level=level).compress(
-            data, asbytes=True
-        )
-    import zlib
-
-    return zlib.compress(data, level)
+    return pa.Codec("zstd", compression_level=level).compress(
+        data, asbytes=True
+    )
 
 
 def _gp_decompress(comp, gp_id: int, expected_len: int) -> bytes:
@@ -1249,49 +1107,15 @@ def _gp_decompress(comp, gp_id: int, expected_len: int) -> bytes:
     return zlib.decompress(bytes(comp))
 
 
-def _gp_probe_decode_ok(sample: bytes, gp_probe: bytes, gp_id: int) -> bool:
-    """Relative decode timing, candidate vs the snappy path ZEBRA uses."""
-    import time
-
-    import pyarrow as pa
-
-    try:
-        snappy = pa.Codec("snappy")
-        snap = snappy.compress(sample)
-        t0 = time.perf_counter()
-        snappy.decompress(snap, len(sample))
-        t_snappy = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        _gp_decompress(gp_probe, gp_id, len(sample))
-        t_gp = time.perf_counter() - t0
-        return t_gp <= _GP_DECODE_BUDGET * max(t_snappy, 1e-6)
-    except Exception:
-        return False
-
-
-def _fsst_decode_nspb(sample: bytes, fsst_probe: bytes) -> float:
-    """Measured FSST decode cost of the 64 KB sample in ns per OUTPUT
-    byte (best of 2 back-to-back runs to damp scheduler blips)."""
-    import time
-
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        _fsst.decompress(memoryview(fsst_probe), 0)
-        dt = time.perf_counter() - t0
-        best = min(best, dt)
-    return best * 1e9 / max(len(sample), 1)
-
-
-def _probe_decode_ok(sample: bytes, fsst_probe: bytes) -> bool:
-    """Gate the FSST family's balanced-policy decode budget on ABSOLUTE
-    ns/byte against a pinned nominal-snappy bar (_FSST_NSPB_BUDGET) —
-    see the constant's comment for why the old snappy-RATIO gate tracked
-    the sandbox's grant instead of the codec."""
-    try:
-        return _fsst_decode_nspb(sample, fsst_probe) <= _FSST_NSPB_BUDGET
-    except Exception:
-        return False  # cannot prove the decode budget -> do not auto-fire
+def _lengths_section(lengths: np.ndarray) -> bytes:
+    """``u8 int-codec | u32 payload_len | payload`` for a string column's
+    lengths (the head of the FSST, FSST_Z and ZLIB/ZSTD wires)."""
+    lcodec, lpayload, _ = encode_ints(lengths)
+    return (
+        bytes([lcodec])
+        + np.uint32(len(lpayload)).astype("<u4").tobytes()
+        + lpayload
+    )
 
 
 def encode_strings(
@@ -1299,7 +1123,6 @@ def encode_strings(
     concat: bytes,
     allow: set[int] | None = None,
     arrow_array=None,
-    probe_key: str | None = None,
 ):
     """Select + encode a string column. Returns ``(codec_id, payload, meta)``.
 
@@ -1307,12 +1130,11 @@ def encode_strings(
     strings; when present the DICT candidate uses Arrow's vectorized
     ``dictionary_encode`` instead of a Python split loop.
 
-    ``probe_key``: stable column identity (e.g. the block column path).
-    The FSST auto-probe costs ~0.25 s per 64 KB sample, so its GATE
-    decision is cached per column and re-validated every 64 blocks — at
-    100 TB the probe would otherwise re-run for every block of the same
-    column.  Only the gate is cached; the <= zebra bound still compares
-    actual candidate sizes per block.
+    Like :func:`encode_ints`, a pure function of the arguments and the
+    codec policy.  The policy offers the FSST family and zstd by their
+    fixed decode costs (``_STR_DECODE_COST``); an offered candidate runs
+    in full only when a cheap heuristic or a 64 KB sample shows a size
+    win.  Selection takes the exact minimum, zebra included.
     """
     lengths = np.ascontiguousarray(lengths, dtype=_I64)
     n = len(lengths)
@@ -1320,197 +1142,98 @@ def encode_strings(
     def allowed(c):
         return allow is None or c in allow
 
+    def forced(c):
+        return allow is not None and c in allow
+
     zebra_payload = pack_strings(lengths, concat)
     best = (StrCodec.ZEBRA, zebra_payload)
-    candidates = {StrCodec.ZEBRA: len(zebra_payload)}
+
+    def consider(codec, payload):
+        nonlocal best
+        if len(payload) < len(best[1]):
+            best = (codec, payload)
+
+    def best_ratio():
+        return len(best[1]) / (len(concat) + 8 * n)
 
     if allowed(StrCodec.DICT) and n >= 16:
         dict_parts = _string_dict_split(lengths, concat, n, arrow_array)
         if dict_parts is not None:
             u_len, u_concat, idx = dict_parts
             icodec, ipayload, _ = encode_ints(idx)
-            payload = (
+            consider(
+                StrCodec.DICT,
                 np.uint32(len(u_len)).astype("<u4").tobytes()
                 + pack_strings(u_len, u_concat)
                 + bytes([icodec])
-                + ipayload
+                + ipayload,
             )
-            candidates[StrCodec.DICT] = len(payload)
-            if len(payload) < len(best[1]):
-                best = (StrCodec.DICT, payload)
 
     # FSST training costs ~hundreds of vectorized passes (~3 MB/s vs
-    # snappy's ~300 MB/s), so by default only attempt it when snappy
-    # compressed poorly.  ZS_FSST=aggressive widens to any large-text
-    # column (measured on real docs: fsst 0.17 vs snappy 0.36 ratio — a
-    # 2.1x size win when encode CPU is cheaper than storage).
-    fsst_forced = allow is not None and StrCodec.FSST in allow
-    aggressive = os.environ.get("ZS_FSST", "") == "aggressive"
-    avg_len = len(concat) / n if n else 0
-    cached = _FSST_PROBE_CACHE.get(probe_key) if probe_key else None
-    if cached is not None and cached[1] > 0:
-        _FSST_PROBE_CACHE[probe_key] = (cached[0], cached[1] - 1)
-        cache_says_yes = bool(cached[0])
-        probe_allowed = False
-    else:
-        cache_says_yes = False
-        probe_allowed = True
-    fsst_worth = (
-        len(concat) >= 256
-        and len(concat) <= (4 << 20)
-        and (
-            len(zebra_payload) > 0.6 * (len(concat) + 8 * n)
-            or (aggressive and avg_len >= 64)
-        )
-    )
-    # a cached-positive probe means FSST won on a sibling block of this
-    # column: attempt it on every subsequent block, not 1-in-64 (r3 bug:
-    # the heuristic recompute overwrote the cache-hit flag)
-    if cache_says_yes and len(concat) <= (4 << 20):
-        fsst_worth = True
+    # snappy's ~300 MB/s), so where the policy offers it, it runs only
+    # when snappy compressed poorly or a 64 KB sample beats the best
+    # candidate by >= 20% on size
+    fsst_worth = False
     if (
-        probe_allowed
-        and allowed(StrCodec.FSST)
-        and not (fsst_forced or fsst_worth or aggressive)
-        and len(concat) >= (64 << 10)
-        and avg_len >= 64
-        and _CODEC_POLICY != "speed"
+        allowed(StrCodec.FSST)
+        and _str_offered(StrCodec.FSST)
+        and 256 <= len(concat) <= (4 << 20)
     ):
-        # sampled probe: FSST costs ~100x snappy to run, so prove the win
-        # on the first 64 KB before paying for the full column.  Full FSST
-        # runs only when the sample beats the best candidate by >= 20%
-        # on SIZE — and, under the default "balanced" policy, only when
-        # the sample's measured DECODE cost clears the absolute
-        # _FSST_NSPB_BUDGET ns/byte bar (r2 lesson: a size-only gate let
-        # FSST auto-fire on document text and the decode leg regressed
-        # 3.2x; r6 lesson: a snappy-RATIO gate tracked the host grant, not
-        # the codec).  ZS_CODEC_POLICY=size restores the size-only gate;
-        # ZS_CODEC_POLICY=speed disables the auto-probe entirely.
-        sample = concat[: 64 << 10]
-        probe = _fsst.compress(sample)
-        decision = False
-        if probe is not None:
-            best_ratio = len(best[1]) / (len(concat) + 8 * n)
-            if len(probe) / len(sample) < 0.8 * best_ratio:
-                if _CODEC_POLICY == "size" or _probe_decode_ok(sample, probe):
-                    decision = True
-                    fsst_worth = len(concat) <= (4 << 20)
-        if probe_key:
-            _FSST_PROBE_CACHE[probe_key] = (decision, 63)
-
-    fsstz_forced = allow is not None and StrCodec.FSST_Z in allow
-    if (
-        len(concat) >= 256
-        and (
-            (allowed(StrCodec.FSST) and (fsst_forced or fsst_worth))
-            or fsstz_forced
-        )
+        fsst_worth = len(zebra_payload) > 0.6 * (len(concat) + 8 * n)
+        avg_len = len(concat) / max(n, 1)
+        if not fsst_worth and len(concat) >= (64 << 10) and avg_len >= 64:
+            sample = concat[: 64 << 10]
+            probe = _fsst.compress(sample)
+            fsst_worth = (
+                probe is not None
+                and len(probe) / len(sample) < 0.8 * best_ratio()
+            )
+    if len(concat) >= 256 and (
+        forced(StrCodec.FSST) or fsst_worth or forced(StrCodec.FSST_Z)
     ):
         fs = _fsst.compress(concat)
         if fs is not None:
-            lcodec, lpayload, _ = encode_ints(lengths)
-            head = (
-                bytes([lcodec])
-                + np.uint32(len(lpayload)).astype("<u4").tobytes()
-                + lpayload
-            )
+            head = _lengths_section(lengths)
             if allowed(StrCodec.FSST):
-                payload = head + fs
-                candidates[StrCodec.FSST] = len(payload)
-                if len(payload) < len(best[1]):
-                    best = (StrCodec.FSST, payload)
+                consider(StrCodec.FSST, head + fs)
             # FSST_Z: the FSST section re-entropy-coded by zstd (FSST's
             # codes are dense byte symbols that a Huffman/FSE stage still
-            # shrinks ~20-25%; the symbol pass already paid the slow
-            # training, the zstd pass on the ~0.18x output is near-free).
-            # Measured on document text: fsst 0.177 -> fsst+zstd 0.136-0.140
-            # of raw.  Decode adds one fast inflate before the (already
-            # budget-gated) symbol expansion, so the candidate rides the
-            # SAME probe/streak family as FSST.
-            if allowed(StrCodec.FSST_Z) and _zstd_available():
-                lvl = 12 if _CODEC_POLICY == "size" else 1
-                comp = _gp_compress(fs, StrCodec.ZSTD, lvl)
-                payload = (
+            # shrinks ~20-25%; the zstd pass on the ~0.18x output is
+            # near-free).  Measured on document text: fsst 0.177 ->
+            # fsst+zstd 0.136-0.140 of raw.
+            if allowed(StrCodec.FSST_Z):
+                comp = _zstd_compress(fs, 12 if _CODEC_POLICY == "size" else 1)
+                consider(
+                    StrCodec.FSST_Z,
                     head
                     + np.uint32(len(fs)).astype("<u4").tobytes()
                     + np.uint32(len(comp)).astype("<u4").tobytes()
-                    + comp
+                    + comp,
                 )
-                candidates[StrCodec.FSST_Z] = len(payload)
-                if len(payload) < len(best[1]):
-                    best = (StrCodec.FSST_Z, payload)
 
-    # general-purpose-compressor candidate: zstd when pyarrow has it, else
-    # DEFLATE; probe-gated exactly like FSST (its own cache + decode
-    # budget).  The probe itself is cheap (~1 ms/64 KB) so it fires on any
-    # sizeable text column; the FULL compress only runs on a probe win.
-    if _zstd_available() and allowed(StrCodec.ZSTD):
-        gp_id = StrCodec.ZSTD
-        gp_level = _ZSTD_LEVEL_SIZE if _CODEC_POLICY == "size" else _ZSTD_LEVEL
-    else:
-        gp_id, gp_level = StrCodec.ZLIB, _ZLIB_LEVEL
-    gp_forced = allow is not None and gp_id in allow
-    zcached = _GP_PROBE_CACHE.get(probe_key) if probe_key else None
-    if zcached is not None and zcached[1] > 0:
-        _GP_PROBE_CACHE[probe_key] = (zcached[0], zcached[1] - 1)
-        gp_worth = bool(zcached[0])
-        zprobe_allowed = False
-    else:
-        gp_worth = False
-        zprobe_allowed = True
+    # zstd: entropy coding typically beats snappy 2-3x on text; the full
+    # compress runs only when a 64 KB sample beats the best candidate by
+    # >= 10% on size
+    level = _ZSTD_LEVEL_SIZE if _CODEC_POLICY == "size" else _ZSTD_LEVEL
+    zstd_worth = False
     if (
-        zprobe_allowed
-        and allowed(gp_id)
-        and not gp_forced
-        and len(concat) >= (16 << 10)
-        and _CODEC_POLICY != "speed"
+        allowed(StrCodec.ZSTD)
+        and _str_offered(StrCodec.ZSTD)
+        and (16 << 10) <= len(concat) <= _ZSTD_MAX_FULL
     ):
         sample = concat[: 64 << 10]
-        zprobe = _gp_compress(sample, gp_id, gp_level)
-        decision = False
-        best_ratio = len(best[1]) / (len(concat) + 8 * n)
-        if len(zprobe) / len(sample) < 0.9 * best_ratio:
-            if _CODEC_POLICY == "size" or _gp_probe_decode_ok(
-                sample, zprobe, gp_id
-            ):
-                decision = True
-        gp_worth = decision and len(concat) <= _GP_MAX_FULL
-        if probe_key:
-            _GP_PROBE_CACHE[probe_key] = (decision, 63)
-    if gp_worth and len(concat) > _GP_MAX_FULL:
-        gp_worth = False  # cached-positive on an oversized block
-    if allowed(gp_id) and len(concat) >= 256 and (gp_forced or gp_worth):
-        comp = _gp_compress(concat, gp_id, gp_level)
-        lcodec, lpayload, _ = encode_ints(lengths)
-        payload = (
-            bytes([lcodec])
-            + np.uint32(len(lpayload)).astype("<u4").tobytes()
-            + lpayload
+        zprobe = _zstd_compress(sample, level)
+        zstd_worth = len(zprobe) / len(sample) < 0.9 * best_ratio()
+    if len(concat) >= 256 and (forced(StrCodec.ZSTD) or zstd_worth):
+        comp = _zstd_compress(concat, level)
+        consider(
+            StrCodec.ZSTD,
+            _lengths_section(lengths)
             + np.uint32(len(comp)).astype("<u4").tobytes()
-            + comp
+            + comp,
         )
-        candidates[gp_id] = len(payload)
-        if len(payload) < len(best[1]):
-            best = (gp_id, payload)
 
     codec, payload = best
-    if probe_key:
-        # FSST and FSST_Z are one probe family: a win by either resets
-        # the streak (FSST_Z winning must not flip the shared cache off)
-        for cids, cache, streak in (
-            ((StrCodec.FSST, StrCodec.FSST_Z), _FSST_PROBE_CACHE, _FSST_LOSS_STREAK),
-            ((gp_id,), _GP_PROBE_CACHE, _GP_LOSS_STREAK),
-        ):
-            if not any(c in candidates for c in cids):
-                continue
-            if codec in cids:
-                streak[probe_key] = 0
-            else:
-                s = streak.get(probe_key, 0) + 1
-                streak[probe_key] = s
-                if s >= _PROBE_LOSS_LIMIT and cache.get(probe_key, (False, 0))[0]:
-                    cache[probe_key] = (False, 63)
-                    streak[probe_key] = 0
     meta = {
         "codec": StrCodec.NAMES[codec],
         "n": n,

@@ -3,14 +3,13 @@
 The operational complement of the round-trip law: at 100 TB you cannot
 diff decoded output against the source every day, but you CAN stream an
 audit pass that, per block, (a) checks the stored crc32, (b) decodes the
-payload, (c) re-encodes the decoded batch HINT-FREE and PROBE-FREE (the
-production selector's per-column hint cache and timed FSST/ZLIB probes
-make live encodes depend on preceding blocks and wall-clock; the audit
-re-encode runs under the ``speed`` policy so it is a deterministic
-function of the block values) and confirms the re-encode decodes
-BIT-identically — compared via IPC bytes, so NaN payload bits and signed
-zeros are held to the same bit-exact standard as the round-trip tests.
-Byte equality of the payloads is kept as the cheap fast path.
+payload, (c) re-encodes the decoded batch (the selector is a pure
+function of the block values and the codec policy, so under the build and
+policy that wrote the block the re-encode reproduces it byte for byte) and
+confirms the re-encode decodes BIT-identically — compared via IPC bytes,
+so NaN payload bits and signed zeros are held to the same bit-exact
+standard as the round-trip tests.  Byte equality of the payloads is kept
+as the cheap fast path.
 
 Scope (what the law can and cannot catch): crc_ok catches storage
 corruption; decode_ok catches payloads the current decoder rejects;
@@ -34,7 +33,6 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from ..codec import codecs as _codecs
 from ..codec.blocks import decode_batch, encode_batch
 from ..codec.warmup import warm_codec
 
@@ -100,10 +98,7 @@ def verify_blocks(blocks: DataFrame, check_reencode: bool = True) -> DataFrame:
                         decoded = decode_batch(payload, schema)
                         decode_ok = decoded.num_rows == n_rows
                         if check_reencode:
-                            with _codecs.codec_policy("speed"):
-                                re_payload, _ = encode_batch(
-                                    decoded, use_hints=False
-                                )
+                            re_payload, _ = encode_batch(decoded)
                             # byte equality = fast path; otherwise the
                             # re-encode must decode bit-identically
                             reenc = re_payload == payload or _ipc_bytes(
