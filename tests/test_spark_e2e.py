@@ -7,6 +7,11 @@ DataFrame level: write/read through the blocks table and compare exactly.
 
 from __future__ import annotations
 
+import os
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -48,7 +53,7 @@ def test_real_tables_roundtrip(spark):
 def test_parquet_direct_roundtrip(spark, tmp_path):
     """encode_parquet_direct (the split-shipping bench/job path) must
     roundtrip and emit the same per-table totals as encode_df; splits are
-    grouped ~4 tasks/core (r5), which must not affect content."""
+    packed into Spark-sized tasks, which must not affect content."""
     from zebra_spark.sources.parquet_direct import encode_parquet_direct
 
     df = f1_table(spark, 2000, partitions=3, rows_per_batch=1 << 10).cache()
@@ -58,6 +63,108 @@ def test_parquet_direct_roundtrip(spark, tmp_path):
     dec = decode_df(blocks, resolve_schemas=True)
     assert_df_equal(df, dec.select(df.columns))
     blocks.unpersist()
+
+
+def _f1_multi_file(spark, tmp_path) -> str:
+    """3 parquet files x 3 row groups of unequal size (200, 200, 100 rows)."""
+    t = f1_table(spark, 1500, partitions=3, rows_per_batch=512).toArrow()
+    d = tmp_path / "f1multi"
+    d.mkdir()
+    for k in range(3):
+        pq.write_table(t.slice(500 * k, 500), d / f"part-{k}.parquet", row_group_size=200)
+    return str(d)
+
+
+def test_pack_splits_follows_spark_file_partition_rule():
+    from zebra_spark.sources.tasks import pack_splits
+
+    MB = 1 << 20
+    # 8 equal splits at parallelism 4: 2 splits per task, input order kept
+    assert pack_splits([7 * MB] * 8, 128 * MB, 4 * MB, 4) == [
+        [0, 1], [2, 3], [4, 5], [6, 7]
+    ]
+    # maxSplitBytes = min(128, max(4, (33 + 6 * 4) / 4)) = 14.25 MB; largest
+    # first, next fit, each split charged the 4 MB open cost
+    sizes = [s * MB for s in (5, 9, 2, 6, 3, 8)]
+    tasks = pack_splits(sizes, 128 * MB, 4 * MB, 4)
+    assert tasks == [[1], [5], [3], [0, 4], [2]]
+    assert tasks == pack_splits(sizes, 128 * MB, 4 * MB, 4)
+    # every split exactly once, in size order
+    assert [i for t in tasks for i in t] == sorted(range(6), key=lambda i: -sizes[i])
+    # capped by maxPartitionBytes, floored by the open cost
+    assert len(pack_splits([60 * MB] * 10, 128 * MB, 4 * MB, 1)) == 5
+    assert len(pack_splits([1024] * 100, 128 * MB, 4 * MB, 4)) == 4
+    assert pack_splits([], 128 * MB, 4 * MB, 4) == []
+
+
+def test_file_task_plan_matches_spark_parquet_scan(spark, tmp_path):
+    """plan_file_tasks packs whole files exactly as Spark's own parquet scan
+    does under the session's settings: same number of partitions."""
+    from zebra_spark.sources.tasks import plan_file_tasks
+
+    rng = np.random.default_rng(7)
+    d = tmp_path / "sized"
+    d.mkdir()
+    paths = []
+    for k, mb in enumerate((5, 9, 2, 6, 3, 8)):
+        blob = rng.integers(0, 256, mb << 20, dtype=np.uint8).tobytes()
+        p = str(d / f"f{k}.parquet")
+        pq.write_table(pa.table({"b": [blob]}), p, compression="none")
+        paths.append(p)
+    tasks = plan_file_tasks(spark, paths)
+    assert [[i for i, _ in t] for t in tasks] == [[1], [5], [3], [0, 4], [2]]
+    assert len(tasks) == spark.read.parquet(str(d)).rdd.getNumPartitions()
+
+
+def test_parquet_direct_plan_is_one_stage(spark, tmp_path):
+    """One ingest = one job of one stage with the planned task count: a
+    JVM-only source, so no RDD scan and no Exchange in the plan."""
+    from zebra_spark.sources.parquet_direct import encode_parquet_direct, plan_row_groups
+
+    src = _f1_multi_file(spark, tmp_path)
+    plan = plan_row_groups(spark, src)
+    assert plan == plan_row_groups(spark, src)
+    assert sorted(s for t in plan for s in t) == sorted(
+        (os.path.join(src, f"part-{k}.parquet"), rg) for k in range(3) for rg in range(3)
+    )
+    blocks = encode_parquet_direct(spark, src)
+    physical = blocks._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in physical and "ExistingRDD" not in physical, physical
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test_parquet_direct_plan_is_one_stage"
+    sc.setJobGroup(group, "encode_parquet_direct write")
+    try:
+        blocks.write.parquet(str(tmp_path / "blocks"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    stages = tracker.getJobInfo(jobs[0]).stageIds
+    assert [tracker.getStageInfo(s).numTasks for s in stages] == [len(plan)]
+
+
+def test_parquet_direct_blocks_equal_per_split_encode(spark, tmp_path):
+    """The {block_id: payload} map equals encoding every row-group split
+    on its own, without Spark."""
+    from zebra_spark.operators.encode import encode_chunk_rows
+    from zebra_spark.sources.parquet_direct import encode_parquet_direct, list_row_groups
+
+    src = _f1_multi_file(spark, tmp_path)
+    want = {}
+    for f, rg in list_row_groups(src):
+        table = pq.ParquetFile(f).read_row_group(rg)
+        state = {"seq": 0}
+        for chunk in table.to_batches(max_chunksize=1 << 16):
+            for b in encode_chunk_rows(
+                chunk, task_tag=f"{os.path.basename(f)}:{rg}", _state=state
+            ):
+                want[b.column("block_id")[0].as_py()] = b.column("payload")[0].as_py()
+    rows = encode_parquet_direct(spark, src).select("block_id", "payload").collect()
+    got = {r["block_id"]: bytes(r["payload"]) for r in rows}
+    assert len(rows) == len(got) == len(want) >= 9
+    assert got == want
 
 
 def test_salted_encode_roundtrip(spark):

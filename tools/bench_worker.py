@@ -43,10 +43,10 @@ def main() -> None:
     def run_once():
         t0 = time.perf_counter()
         # encode_metrics_direct folds block metrics python-side (the
-        # production-sink shape — payloads never cross the Arrow socket),
-        # with tasks_per_core=1: local mode's ~60 ms serialized per-task
-        # handshake and ~1 s of JVM payload ingest would otherwise eat a
-        # ~2.3 s hi leg (see the function's docstring for measurements)
+        # production-sink shape — payloads never cross the Arrow socket):
+        # ~1 s of JVM payload ingest would otherwise eat a ~2.3 s hi leg
+        # (see the function's docstring); its tasks are Spark-sized, so
+        # each Python task's ~0.19 CPU-s start-up is paid a few times only
         row = (
             encode_metrics_direct(spark, path)
             .groupBy()

@@ -220,8 +220,13 @@ def decode_df(
     """
     if key_range is not None or key_equals is not None:
         resolve_schemas = True
+    smap = schema_map_of(blocks) if resolve_schemas else None
     if schema is None:
-        schema = arrow_schema_of(blocks)
+        if smap is not None and len(smap) == 1:
+            # the map already holds the only schema: no second job
+            schema = pa.ipc.read_schema(pa.py_buffer(next(iter(smap.values()))))
+        else:
+            schema = arrow_schema_of(blocks)
     if isinstance(schema, pa.Schema):
         schema = spark_schema_with_meta(schema)
     if columns is not None:
@@ -233,7 +238,6 @@ def decode_df(
                 f"blocks contain {sorted(known)}"
             )
         schema = type(schema)([f for f in schema.fields if f.name in set(columns)])
-    smap = schema_map_of(blocks) if resolve_schemas else None
     if key_range is not None:
         # filter AFTER the schema map is built from the unfiltered blocks
         blocks = zone_map_filter(blocks, key_range)

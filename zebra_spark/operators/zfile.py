@@ -48,6 +48,7 @@ from ..codec.bytecodec import (
     unpack_sized_byte_array,
 )
 from ..codec.intcodec import pack_int_array, unpack_int_array
+from ..sources.tasks import map_tasks, plan_file_tasks
 from .zschema import ENUM_META, enum_layout, struct_to_zschema, zschema_to_struct
 
 MAGIC_V3 = b"||ZEBRA||00003||"
@@ -682,7 +683,8 @@ def read_zebra_files(
 ):
     """Parallel read of zebra V3 files back into a DataFrame.
 
-    Each task streams its file in ``chunk_bytes`` increments and yields
+    Files are packed into tasks by size (``sources.tasks``); each task
+    streams its files one at a time in ``chunk_bytes`` increments and yields
     per-block batches as they parse — peak memory is one block + one chunk,
     not the file size, and downstream operators start before the file
     finishes.
@@ -698,15 +700,11 @@ def read_zebra_files(
         _validate_key_range(
             first_schema, _table_kind_of(first_schema), key_range
         )
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        max(1, len(paths))
-    )
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            for p in rb.column("path").to_pylist():
-                with open(p, "rb") as f:
-                    _, blocks, _ = open_zebra_stream(f, chunk_bytes, key_range)
-                    yield from blocks
+    def run(task: list[tuple[int, str]]) -> Iterator[pa.RecordBatch]:
+        for _, p in task:
+            with open(p, "rb") as f:
+                _, blocks, _ = open_zebra_stream(f, chunk_bytes, key_range)
+                yield from blocks
 
-    return pdf.mapInArrow(run, schema=first_schema)
+    return map_tasks(spark, plan_file_tasks(spark, paths), run, first_schema)

@@ -138,7 +138,7 @@ def binary_block_byte_counts(blocks: DataFrame) -> DataFrame:
 
 def v3_summary(spark, paths: list[str]) -> dict:
     """zebra `summary` over ``||ZEBRA||00003||`` files (Command/Summary.hs:
-    64-100 parity): one task per file STREAMS its blocks (bounded reader)
+    64-100 parity): each task STREAMS its files' blocks (bounded reader)
     and emits a per-file partial; the handful of per-file rows reduce
     driver-side.  Binary tables count BYTES as rows; Map tables report
     first/last key rendered as ztxt JSON."""
@@ -149,59 +149,57 @@ def v3_summary(spark, paths: list[str]) -> dict:
     from ..operators import ztxt as _zt
     from ..operators.zfile import _table_kind_of, open_zebra_stream
     from ..operators.zschema import struct_to_zschema
+    from ..sources.tasks import map_tasks, plan_file_tasks
 
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        max(1, len(paths))
-    )
+    def run(task):
+        for _, p in task:
+            with open(p, "rb") as f:
+                schema, blocks, _ = open_zebra_stream(f)
+                kind = _table_kind_of(schema)
+                render = None
+                if kind == "map":
+                    node = struct_to_zschema(schema)
+                    _, val = _zt._variant(node, "table")
+                    render = _zt._render_col(val["key"])
+                nb = nr = mx = 0
+                fk = lk = None
+                for b in blocks:
+                    if kind == "binary":
+                        n = int(
+                            pa.compute.sum(
+                                pa.compute.binary_length(b.column("value"))
+                            ).as_py()
+                            or 0
+                        )
+                    else:
+                        n = b.num_rows
+                    nb += 1
+                    nr += n
+                    mx = max(mx, n)
+                    if kind == "map" and b.num_rows:
+                        if fk is None:
+                            fk = render(b.column("key")[0].as_py())
+                        lk = render(b.column("key")[b.num_rows - 1].as_py())
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "path": [p],
+                    "n_blocks": [nb],
+                    "n_rows": [nr],
+                    "max_rows": [mx],
+                    "first_key": [None if fk is None else _json.dumps(
+                        fk, separators=(",", ":"), sort_keys=True,
+                        ensure_ascii=False)],
+                    "last_key": [None if lk is None else _json.dumps(
+                        lk, separators=(",", ":"), sort_keys=True,
+                        ensure_ascii=False)],
+                }
+            )
 
-    def run(batches):
-        for rb in batches:
-            for p in rb.column("path").to_pylist():
-                with open(p, "rb") as f:
-                    schema, blocks, _ = open_zebra_stream(f)
-                    kind = _table_kind_of(schema)
-                    render = None
-                    if kind == "map":
-                        node = struct_to_zschema(schema)
-                        _, val = _zt._variant(node, "table")
-                        render = _zt._render_col(val["key"])
-                    nb = nr = mx = 0
-                    fk = lk = None
-                    for b in blocks:
-                        if kind == "binary":
-                            n = int(
-                                pa.compute.sum(
-                                    pa.compute.binary_length(b.column("value"))
-                                ).as_py()
-                                or 0
-                            )
-                        else:
-                            n = b.num_rows
-                        nb += 1
-                        nr += n
-                        mx = max(mx, n)
-                        if kind == "map" and b.num_rows:
-                            if fk is None:
-                                fk = render(b.column("key")[0].as_py())
-                            lk = render(b.column("key")[b.num_rows - 1].as_py())
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "path": [p],
-                        "n_blocks": [nb],
-                        "n_rows": [nr],
-                        "max_rows": [mx],
-                        "first_key": [None if fk is None else _json.dumps(
-                            fk, separators=(",", ":"), sort_keys=True,
-                            ensure_ascii=False)],
-                        "last_key": [None if lk is None else _json.dumps(
-                            lk, separators=(",", ":"), sort_keys=True,
-                            ensure_ascii=False)],
-                    }
-                )
-
-    rows = pdf.mapInArrow(
+    rows = map_tasks(
+        spark,
+        plan_file_tasks(spark, paths),
         run,
-        schema="path string, n_blocks long, n_rows long, max_rows long, "
+        "path string, n_blocks long, n_rows long, max_rows long, "
         "first_key string, last_key string",
     ).collect()
     out = {
